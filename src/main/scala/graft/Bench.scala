@@ -1,18 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The tables and local cores every timed run uses; graft.Dev reuses both. */
+  val sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  val cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // bench tables are single ~10-60MB parquet files: the default 128MB
-      // split size would scan each on ONE core; 8MB splits spread the scan
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.bench(cores)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up: JVM/codegen paths + OS page cache for the inputs, so per-query
     // numbers measure operator cost, not cold-start. Per-table try/catch: a
@@ -30,17 +24,9 @@ object Bench {
     // loudly visible on stderr — a regression must not flatter the benchmark
     val rt = Runtime.getRuntime
     // dev filter: SPARK_GRAFT_BENCH_ONLY=q69,q94 times just those queries
-    // (floor patching / single-query iteration); unset = the full suite.
-    // A token matches a query by its FULL name or its qNN prefix exactly —
-    // startsWith would make "q6" silently run q60–q69 (round-6 ADVICE) —
-    // and a filter matching nothing is an error, not an empty bench.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) =>
-        only.forall(f => f.contains(n) || f.contains(n.takeWhile(_ != '_'))) }
-    require(ordered.nonEmpty,
-      s"SPARK_GRAFT_BENCH_ONLY=${only.map(_.mkString(",")).getOrElse("")} matched no queries")
+    // (floor patching / single-query iteration); unset = the full suite
+    val ordered = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(SparkEntry.queries.toSeq.sortBy(_._1))(only => SparkEntry.select(only.split(',')))
     // INTERLEAVED min-of-N (default 3): run the whole query list N times in
     // run order and keep each query's minimum. A co-tenant load that ramps
     // mid-run (the round-5 artifact: q32+ flagged 2.3-9.6x as a contiguous
@@ -87,7 +73,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: ANSI mode makes a long-sum of full-range hashes
       // an overflow error; the xor fold does the same per-row work
-      spark.range(0L, 500000000L, 1L, cpus.toInt)
+      spark.range(0L, 500000000L, 1L, cores)
         .selectExpr("bit_xor(xxhash64(id)) as s").collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: build a ~10× scale probe dataset from sf0.1 by UNION of key-
@@ -47,12 +47,7 @@ object ScaleGen {
     val mode = if (args.length > 3) args(3) else "shift"
     require(mode == "shift" || mode == "dense" || mode == "clustered",
       s"unknown mode $mode")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

@@ -239,6 +239,21 @@ object SparkEntry {
     "q207_pq_recall"        -> ((s, d) => Similarity.pqRecall(s, d)),
   )
 
+  /** The queries named by `tokens`, sorted by name — the one filter Bench,
+    * Verify and Dev share. A token matches a query by its full name or by
+    * its `qNN` prefix exactly: "q6" selects none of q60–q69, which a
+    * `startsWith` match would (round-6 ADVICE). A token that matches
+    * nothing is an error, never a silently empty run. */
+  def select(tokens: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val wanted = tokens.map(_.trim).filter(_.nonEmpty)
+    require(wanted.nonEmpty, "no query names given")
+    def matches(t: String, name: String) = name == t || name.takeWhile(_ != '_') == t
+    val all = queries.toSeq.sortBy(_._1)
+    val unknown = wanted.filterNot(t => all.exists { case (n, _) => matches(t, n) })
+    require(unknown.isEmpty, s"no query matches ${unknown.mkString(", ")}")
+    all.filter { case (n, _) => wanted.exists(matches(_, n)) }
+  }
+
   def oracleSql: Map[String, String] = Oracles.sql
 
   /** Driver-proven EDGE types — the only types with green hash precedents

@@ -1,32 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name prefixes to dump (builder
-    // iteration aid; the driver always calls with exactly two args)
+    // optional 3rd arg: comma-separated query names or qNN prefixes to dump,
+    // for iterating on a few queries; the correctness gate passes two args
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Seq[String]] = args.lift(2).map(_.split(',').toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val picked = args.lift(2)
+      .fold(SparkEntry.queries.toSeq)(only => SparkEntry.select(only.split(',')))
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      // exact full name or exact qNN prefix, matching Bench's ONLY filter —
-      // startsWith would make "q10" also dump q100..q103
-      .filter { case (name, _) =>
-        only.forall(_.exists(p => name == p || name.takeWhile(_ != '_') == p)) }
-      .foreach { case (name, fn) =>
+    picked.foreach { case (name, fn) =>
+      // NonFatal only: an OutOfMemoryError/LinkageError leaves a JVM whose
+      // later dumps cannot be trusted — abort loudly, as Bench does
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release operator-internal persists between queries, as Bench does —

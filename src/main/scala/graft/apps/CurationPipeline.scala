@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.operators.{CurationStages, Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,11 +100,7 @@ object CurationPipeline {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outRoot = args.lift(1).getOrElse("/tmp/graft_curation")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.app("graft-curation", 8)
     spark.sparkContext.setLogLevel("WARN")
     val (curated, gated, total) = run(spark, dir, outRoot)
     println(s"""{"curated":$curated,"quality_gated":$gated,"input":$total,"out":"$outRoot"}""")

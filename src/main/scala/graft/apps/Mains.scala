@@ -235,14 +235,7 @@ object Mains {
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: graft.apps.Mains <app> <inDir> <outDir> <ckptDir>")
     val Array(app, inDir, outDir, ckptDir) = args.take(4)
-    val builder = SparkSession.builder()
-      .appName(s"graft-$app")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit provides the master; standalone runs default to local
-    val spark =
-      (if (sys.props.contains("spark.master")) builder else builder.master("local[*]"))
-        .getOrCreate()
+    val spark = graft.Sessions.app(s"graft-$app", 32)
     start(spark, app, inDir, outDir, ckptDir).foreach(_.awaitTermination())
   }
 }

@@ -33,8 +33,8 @@ import org.apache.spark.sql.types._
   *    the fat transient columns (text, embedding) never reach the database.
   *
   * Kill-mid-stream/restart with no duplicate admissions is spec-gated
-  * (StreamingCurationSpec); throughput is measured in Microbench with the
-  * other streaming shapes (PLANS.md).
+  * (StreamingCurationSpec); its throughput is recorded with the other
+  * streaming shapes in PLANS.md "Streaming throughput (round 6)".
   *
   * A domain-relevance gate composes the same way and is wired as [[admit]]'s
   * optional `dsir` parameter: train [[graft.operators.TextOps.dsirRatios]] on
@@ -111,17 +111,13 @@ object StreamingCuration {
     // (build.sbt keeps the main library Spark-only): spark-submit --jars
     // duckdb_jdbc.jar in production, `sbt Test/runMain` in-container (the
     // test classpath carries the driver). Io.connect survives the --jars
-    // child-classloader shape (JdbcSinkSpec). Smoke-verified end-to-end
+    // child-classloader shape (JdbcSinkSpec). Verified end-to-end
     // against sf0.001 stores: exact dups rejected, gate-passing admitted
     // once, schema lands transient-free (NOTES_r7.md).
     require(args.length >= 4,
       "usage: graft.apps.StreamingCuration <streamInDir> <storeSfDir> <duckdbPath> <ckptDir>")
     val Array(inDir, storeDir, dbPath, ckptDir) = args.take(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.app("graft-streaming-curation", 8)
     spark.sparkContext.setLogLevel("WARN")
     val fpStore = graft.Tables.load(spark, storeDir, "documents")
       .select(md5(col("text").cast("binary")).as("fingerprint"))

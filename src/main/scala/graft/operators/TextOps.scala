@@ -2452,10 +2452,10 @@ object TextOps {
     * position in the returned array. Row-for-row equality with the window
     * form is spec-gated (TextOpsSpec).
     *
-    * Switchover (Microbench, sf0.1): window 0.199 s vs topK 0.257 s — at
-    * fixture scale the window wins by ~30%, because every source fits one
-    * reducer comfortably and the UDAF's kryo buffer costs more than the
-    * sort saves. The crossover is where a single source outgrows one
+    * Switchover (PLANS.md "Round-7 de-skew", sf0.1): window 0.199 s vs
+    * topK 0.257 s — at fixture scale the window wins by ~30%, because
+    * every source fits one reducer comfortably and the UDAF's kryo buffer
+    * costs more than the sort saves. The crossover is where a single source outgrows one
     * reducer's sort (spill territory, O(rows) shuffled vs this form's
     * O(sources·cap·mappers)), which is why q80 stays on the window at
     * bench scale and THIS form is the one a cluster deployment binds. */
@@ -2496,9 +2496,9 @@ object TextOps {
     * wrong answer. Row-for-row equality with the windowed form is
     * spec-gated (TextOpsSpec); the stats/check collects are per-source —
     * bounded control-plane, like the quantizer samples. Cost at fixture
-    * scale (Microbench, sf0.1): 0.275 s vs the windowed form's 0.190 s —
-    * the stats+check passes cost ~85 ms where every source fits one
-    * reducer anyway; at a billion-row source the windowed form sorts the
+    * scale (PLANS.md "Round-7 de-skew", sf0.1): 0.275 s vs the windowed
+    * form's 0.190 s — the stats+check passes cost ~85 ms where every
+    * source fits one reducer anyway; at a billion-row source the windowed form sorts the
     * whole source on one task and this form windows a few thousand rows.
     *
     * Cache lifecycle: the projected base frame stays persisted because the

@@ -117,7 +117,8 @@ object Pipelines {
                 wmDelay: String = "3 seconds"): DataFrame = {
     // wmDelay is the state knob: join state holds every row within the
     // watermark delay of the stream head, so state size = delay × input
-    // rate. Microbench sweeps it (3 s vs 30 s = 10× state) per provider.
+    // rate. PLANS.md "Streaming throughput (round 6)" records the 3 s vs
+    // 30 s (10× state) sweep per state-store provider.
     val i = info.toDF()
       .withColumn("i_time", timestamp_millis(col("create_ts")))
       .withWatermark("i_time", wmDelay)

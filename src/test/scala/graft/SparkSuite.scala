@@ -13,13 +13,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.checkpointLocation",
+  lazy val session: SparkSession = Sessions.local(4,
+    "spark.sql.streaming.checkpointLocation" ->
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    .getOrCreate()
 }

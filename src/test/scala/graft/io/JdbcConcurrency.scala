@@ -105,13 +105,7 @@ object JdbcConcurrency {
 object JdbcSoak {
   def main(args: Array[String]): Unit = {
     val rounds = args.headOption.map(_.toInt).getOrElse(200)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-jdbc-soak")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
     try {
       for (r <- 1 to rounds) {
         JdbcConcurrency.disjointRound(spark, s"soak-disjoint-$r")
