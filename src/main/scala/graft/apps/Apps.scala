@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.streaming.{CdcRouter, LogEvent, Pipelines, ProductStats, Stateful}
+import graft.streaming.{CdcRouter, LogEvent, Pipelines, ProductStats, RawLog, Stateful}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -49,36 +49,34 @@ object Apps {
     }
   }
 
-  /** BaseLogApp (app/dwd/BaseLogApp.java): raw ods_base_log → parse → is_new
-    * repair on the WHOLE stream → 3-way split, the reference's operator order
-    * (repair at :156-204 precedes the split at :213-257), so the start and
-    * display outputs carry the repaired flag too. Unparseable records (null
-    * common/ts after permissive from_json) route to the dirty output instead
-    * of crashing the typed stream — the reference's dirty side-output. */
-  def baseLog(inputs: Map[String, DataFrame]): Map[String, DataFrame] = {
-    val parsed = Pipelines.parseRawLog(inputs("ods_base_log"))
+  /** BaseLogApp (app/dwd/BaseLogApp.java) in one keyed pass: raw
+    * ods_base_log → parse → is_new repair on the WHOLE stream, the
+    * reference's operator order (repair at :156-204 precedes the split at
+    * :213-257), so the start and display outputs carry the repaired flag too.
+    * Unparseable records (null common/ts after permissive from_json) ride the
+    * same pass without touching state — one scan and one parse per record —
+    * and [[baseLogSplit]] routes them to the dirty output instead of crashing
+    * the typed stream, the reference's dirty side-output. */
+  def baseLogRepaired(raw: DataFrame): DataFrame = {
+    val parsed = Pipelines.parseRawLog(raw)
     import parsed.sparkSession.implicits._
-    val dirty = parsed.filter(col("common").isNull || col("ts").isNull)
-    val clean = parsed.filter(col("common").isNotNull && col("ts").isNotNull)
-    val typed = clean.as[graft.streaming.RawLog]
-    // Build a FRESH repaired stream per output branch: the three sink queries
-    // each re-execute the plan with their own state store anyway, but a tws
-    // plan embeds its StatefulProcessor INSTANCE, and concurrent query starts
-    // race on that shared instance's driver-side handle (setHandle/init
-    // interleave → one query registers its state variable on another's handle
-    // → STATEFUL_PROCESSOR_DUPLICATE_STATE_VARIABLE_DEFINED). One instance
-    // per branch makes each query's driver init self-contained. The fMGWS
-    // path has no per-instance handle but gets the same treatment for
-    // uniformity.
-    def repaired(): DataFrame =
-      (if (stateApiV2(parsed)) Stateful.repairIsNewRawTws(typed)
-       else Stateful.repairIsNewRaw(typed)).toDF()
-    val (start, _, _) = Pipelines.splitLog(repaired())
-    val (_, page, _) = Pipelines.splitLog(repaired())
-    val (_, _, display) = Pipelines.splitLog(repaired())
-    Map("dwd_start_log" -> start, "dwd_page_log" -> toLogEvents(page).toDF(),
-      "dwd_display_log" -> display, "dwd_dirty_log" -> dirty)
+    val typed = parsed.as[RawLog]
+    (if (stateApiV2(parsed)) Stateful.repairIsNewRawTws(typed)
+     else Stateful.repairIsNewRaw(typed)).toDF()
   }
+
+  /** The four DWD topics of a [[baseLogRepaired]] frame. */
+  def baseLogSplit(repaired: DataFrame): Map[String, DataFrame] = {
+    val dirty = col("common").isNull || col("ts").isNull
+    val (start, page, display) = Pipelines.splitLog(repaired.filter(!dirty))
+    Map("dwd_start_log" -> start, "dwd_page_log" -> toLogEvents(page).toDF(),
+      "dwd_display_log" -> display, "dwd_dirty_log" -> repaired.filter(dirty))
+  }
+
+  /** The DWD app as a pure transform; [[Mains.start]] runs the same two
+    * halves as one streaming query. */
+  def baseLog(inputs: Map[String, DataFrame]): Map[String, DataFrame] =
+    baseLogSplit(baseLogRepaired(inputs("ods_base_log")))
 
   /** UniqueVisitApp (app/dwm/UniqueVisitApp.java): daily first visit per mid. */
   def uniqueVisit(inputs: Map[String, DataFrame]): Map[String, DataFrame] = {

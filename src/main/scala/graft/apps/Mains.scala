@@ -2,6 +2,7 @@ package graft.apps
 
 import java.io.File
 
+import graft.io.Io
 import graft.streaming.{CdcRouter, LogEvent, OrderDetail, OrderInfo, PaymentInfo}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -16,8 +17,17 @@ import org.apache.spark.sql.types._
   *    (`ods_base_log` is raw text lines; `dim_*` inputs are static reads);
   *  - outputs land in `outDir/<topic>` through Spark's transactional file sink
   *    (manifest-committed ⇒ exactly-once across restarts, proven by
-  *    CheckpointRestartSpec);
-  *  - each output query checkpoints under `ckptDir/<topic>`.
+  *    MainsSpec);
+  *  - checkpoint layout: `base_log` is ONE query — one scan, one parse, one
+  *    is_new state store — that writes its four `dwd_*` topics from
+  *    `foreachBatch` through batch-id file sinks (Io.batchFileSink) and
+  *    checkpoints under `ckptDir/base_log`; `base_db` checkpoints under
+  *    `ckptDir/base_db`; every other app runs one query per output topic,
+  *    checkpointed under `ckptDir/<topic>`. A batch-id sink skips batch ids
+  *    its manifest already holds, so [[start]] refuses to start `base_log` or
+  *    `base_db` without its checkpoint over sinks that hold committed batches
+  *    or beside the per-topic `ckptDir/dwd_*` checkpoints of the earlier
+  *    four-query `base_log` (see `requireSinkLayout`).
   *
   * On a cluster with the Kafka connector jar the file bindings swap for
   * Io.kafkaStream / Io.kafkaSink with NO change to the transforms (see
@@ -134,6 +144,46 @@ object Mains {
       .filter(_.isDirectory).map(_.getName).sorted.toSeq
   }
 
+  /** A batch-id file sink skips every batch id its `_spark_metadata` manifest
+    * already holds, and a query without a checkpoint starts at batch 0. So an
+    * app whose `checkpoint` is absent must not start over sinks that hold
+    * committed batches, nor beside `oldCheckpoints` (the per-topic
+    * checkpoints of an earlier layout): it would silently drop every batch up
+    * to the last one committed. And a manifest opened in a directory of
+    * files written without one hides those files from every reader. Both
+    * refuse here, before anything is written. */
+  private def requireSinkLayout(app: String, checkpoint: File, sinks: Seq[File],
+                                oldCheckpoints: Seq[File]): Unit = {
+    def listed(d: File) = Option(d.list()).toSeq.flatten
+    def committed(d: File) = listed(new File(d, "_spark_metadata")).exists(_.matches("\\d+(\\.compact)?"))
+    def unmanifested(d: File) = !new File(d, "_spark_metadata").isDirectory &&
+      listed(d).exists(n => !n.startsWith(".") && !n.startsWith("_"))
+    val stale =
+      if (checkpoint.exists()) Nil else sinks.filter(committed) ++ oldCheckpoints.filter(_.exists)
+    if (stale.nonEmpty) throw new IllegalStateException(
+      s"$app: checkpoint $checkpoint is absent but ${stale.mkString(", ")} already exist: " +
+        "a fresh query restarts at batch 0 and its batch-id file sinks skip every batch id " +
+        "their manifests hold, which would silently drop data. Restart with the checkpoint " +
+        "that wrote these outputs, or move the outputs and old checkpoints aside")
+    val bare = sinks.filter(unmanifested)
+    if (bare.nonEmpty) throw new IllegalStateException(
+      s"$app: ${bare.mkString(", ")} hold files but no _spark_metadata manifest: a batch-id " +
+        "file sink would open one and hide those files from every reader. Move them aside")
+  }
+
+  /** One micro-batch of the fused `base_log` query, persisted once and
+    * released on every path. The count runs the parse, the keyed is_new step
+    * and its state commit once, also when every sink skips a replayed batch
+    * id: the engine fails a batch whose state stores did not all commit. */
+  private[apps] def writeBaseLog(batch: DataFrame, batchId: Long,
+                                 sinks: Map[String, (Long, DataFrame) => Unit]): Unit = {
+    batch.persist()
+    try {
+      batch.count()
+      Apps.baseLogSplit(batch).toSeq.sortBy(_._1).foreach { case (t, df) => sinks(t)(batchId, df) }
+    } finally batch.unpersist()
+  }
+
   private def sinkAll(outputs: Map[String, DataFrame], outDir: String, ckptDir: String,
                       trigger: Trigger): Seq[StreamingQuery] =
     outputs.toSeq.sortBy(_._1).map { case (topic, df) =>
@@ -167,8 +217,17 @@ object Mains {
       Mains.streamJson(spark, inDir, topic, schema, sourceOptions)
     app match {
       case "base_log" =>
-        sink(Apps.baseLog(Map("ods_base_log" ->
-          spark.readStream.options(sourceOptions).text(s"$inDir/ods_base_log"))))
+        val repaired = Apps.baseLogRepaired(
+          spark.readStream.options(sourceOptions).text(s"$inDir/ods_base_log"))
+        val topics = Apps.baseLogSplit(repaired).keys.toSeq.sorted
+        requireSinkLayout(app, new File(s"$ckptDir/base_log"),
+          topics.map(t => new File(s"$outDir/$t")), topics.map(t => new File(s"$ckptDir/$t")))
+        val sinks = topics.map(t => t -> Io.batchFileSink(spark, s"$outDir/$t")).toMap
+        Seq(repaired.writeStream
+          .foreachBatch((batch: DataFrame, batchId: Long) => writeBaseLog(batch, batchId, sinks))
+          .option("checkpointLocation", s"$ckptDir/base_log")
+          .trigger(trigger)
+          .start())
       case "unique_visit" =>
         sink(Apps.uniqueVisit(Map(
           "dwd_page_log" -> streamJson(spark, inDir, "dwd_page_log", Wire.logEvent))))
@@ -221,11 +280,13 @@ object Mains {
       case "base_db" =>
         // facts → dynamic-topic dir, dims → keyed upsert stores: the composed
         // router sink (CdcRouter.run) with the config re-read per micro-batch
+        requireSinkLayout(app, new File(s"$ckptDir/base_db"),
+          Seq(new File(s"$outDir/kafka_facts")), Nil)
         val cdc = streamJson(spark, inDir, "ods_base_db_m", CdcRouter.envelopeSchema)
         Seq(CdcRouter.run(spark, cdc,
           () => spark.read.schema(CdcRouter.configSchema).json(s"$inDir/table_process"),
           factDir = s"$outDir/kafka_facts", dimDir = s"$outDir/hbase_dims",
-          checkpoint = s"$ckptDir/base_db"))
+          checkpoint = s"$ckptDir/base_db", trigger = trigger))
       case other =>
         throw new IllegalArgumentException(
           s"unknown app '$other' — one of: ${appNames.mkString(", ")}")

@@ -1,6 +1,8 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -80,16 +82,20 @@ object Io {
       .option("kafka.bootstrap.servers", servers)
       .option("checkpointLocation", checkpoint)
 
-  /** File-backed dynamic-topic emulation used by tests: rows partitioned into
-    * one directory per topic — observable equivalent of per-topic delivery. */
-  def fileDynamicTopicSink(df: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("topic").json(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  /** Spark's transactional JSON file sink, written from `foreachBatch`: the
+    * returned `(batchId, df)` writer commits `df` to `path` as batch
+    * `batchId` in the sink's `_spark_metadata` manifest and skips a batch id
+    * the manifest already holds. A replayed batch therefore writes nothing and
+    * readers see committed files only, so a query that feeds several sinks
+    * keeps the file sink's exactly-once guarantee. Each batch is coalesced to
+    * the default parallelism: a few files per batch, not one per shuffle
+    * partition. The manifest is created here, so downstream file sources can
+    * bind before the first batch commits. */
+  def batchFileSink(spark: SparkSession, path: String,
+                    partitionBy: Seq[String] = Nil): (Long, DataFrame) => Unit = {
+    val sink = new FileStreamSink(spark, path, new JsonFileFormat, partitionBy, Map.empty)
+    (batchId, df) => sink.addBatch(batchId, df.coalesce(spark.sparkContext.defaultParallelism))
+  }
 
   /** A6/A7: idempotent dim upsert ("MERGE") into a parquet dim table keyed by
     * `pk`: per micro-batch, last-writer-wins against existing rows AND within

@@ -3011,13 +3011,14 @@ object TextOps {
       .agg(sort_array(collect_set(col("source"))).as("ss"))
       .groupBy("ss").agg(count(lit(1)).as("n"))
       .persist()
-    val nCells = cellsDf.count()
-    require(nCells <= cellCap,
-      s"sourceSelect: $nCells source-combination cells exceed the " +
-        s"$cellCap budget — the source dimension is too wide for the cell " +
-        "closure; shrink it upstream or raise cellCap deliberately")
-    val cells = cellsDf.as[(Seq[String], Long)].collect()
-    cellsDf.unpersist(blocking = false)
+    val cells = try {
+      val nCells = cellsDf.count()
+      require(nCells <= cellCap,
+        s"sourceSelect: $nCells source-combination cells exceed the " +
+          s"$cellCap budget — the source dimension is too wide for the cell " +
+          "closure; shrink it upstream or raise cellCap deliberately")
+      cellsDf.as[(Seq[String], Long)].collect()
+    } finally cellsDf.unpersist(blocking = false)
     var live = cells.map { case (ss, n) => (ss.toSet, n) }
     val picks = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long, Long)]
     var coveredTotal = 0L

@@ -73,16 +73,19 @@ object CdcRouter {
 
   /** End-to-end streaming router: facts → dynamic-topic sink dir, dims →
     * per-table parquet upsert stores under `dimDir`. `configProvider` is
-    * re-invoked every micro-batch (the 5 s Timer equivalent). */
+    * re-invoked every micro-batch (the 5 s Timer equivalent). Facts go through
+    * a batch-id file sink partitioned by `topic`, so a batch replayed after a
+    * crash before its commit is not written twice; dim upserts are keyed and
+    * idempotent on replay. */
   def run(spark: SparkSession, cdc: DataFrame, configProvider: () => DataFrame,
-          factDir: String, dimDir: String, checkpoint: String): StreamingQuery =
+          factDir: String, dimDir: String, checkpoint: String,
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val facts = Io.batchFileSink(spark, factDir, partitionBy = Seq("topic"))
     cdc.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val routed = route(validRecords(batch), configProvider()).cache()
         try {
-          routed.filter(col("sink_type") === "kafka")
-            .select("topic", "value")
-            .write.mode("append").partitionBy("topic").json(factDir)
+          facts(batchId, routed.filter(col("sink_type") === "kafka").select("topic", "value"))
           val dims = routed.filter(col("sink_type") === "hbase")
           val tables = dims.select("sink_table", "sink_pk").distinct().collect()
           tables.foreach { r =>
@@ -96,6 +99,7 @@ object CdcRouter {
         ()
       }
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
+      .trigger(trigger)
       .start()
+  }
 }

@@ -22,6 +22,8 @@ case class LogEvent(
   * page + start + displays), so the is_new repair can run BEFORE the 3-way
   * split exactly as the reference does (BaseLogApp.java:156-204 repairs the
   * whole stream; the split at :213-257 then sees repaired flags everywhere).
+  * `common` and `ts` are optional so an unparseable line travels the same
+  * typed pass as a [[RawLog.dirty]] row instead of needing a second scan.
   */
 case class RawCommon(
     ar: String, uid: String, os: String, ch: String, is_new: String,
@@ -40,11 +42,16 @@ case class RawDisplay(
     pos_id: Option[Long], order: Option[Long], page_id: String)
 
 case class RawLog(
-    common: RawCommon,
+    common: Option[RawCommon],
     page: Option[RawPage],
     start: Option[RawStart],
     displays: Option[Seq[RawDisplay]],
-    ts: Long)
+    ts: Option[Long]) {
+
+  /** No `common` or no `ts` after permissive parsing: the reference's dirty
+    * side output. Dirty rows never read or write keyed state. */
+  def dirty: Boolean = common.isEmpty || ts.isEmpty
+}
 
 /** Order fact (reference bean/OrderInfo.java, trimmed): `create_ts` millis. */
 case class OrderInfo(

@@ -58,27 +58,33 @@ object Stateful {
   /** [[repairIsNew]] over the FULL parsed log row, run BEFORE the 3-way split —
     * the reference's operator order (BaseLogApp.java:156-204 repairs, :213-257
     * splits), so start and display outputs also carry the repaired flag.
-    * Same per-mid ValueState[firstVisitDate] semantics as the LogEvent twin. */
+    * Same per-mid ValueState[firstVisitDate] semantics as the LogEvent twin;
+    * [[RawLog.dirty]] rows pass through untouched. */
   def repairIsNewRaw(logs: Dataset[RawLog]): Dataset[RawLog] = {
     import logs.sparkSession.implicits._
     logs
-      .groupByKey(_.common.mid)
+      .groupByKey(rawKey)
       .flatMapGroupsWithState[String, RawLog](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (_: String, it: Iterator[RawLog], state: GroupState[String]) =>
-          val sorted = it.toSeq.sortBy(e => (e.ts, e.page.flatMap(p => Option(p.page_id))))
+          val sorted = it.toSeq.sortBy(rawOrder)
           val out = sorted.map { e =>
-            if (e.common.is_new != "1") e
+            if (!claimsNew(e)) e
             else state.getOption match {
-              case Some(first) if first != dayOf(e.ts) =>
-                e.copy(common = e.common.copy(is_new = "0"))
+              case Some(first) if first != dayOf(e.ts.get) => notNew(e)
               case Some(_) => e
-              case None => state.update(dayOf(e.ts)); e
+              case None => state.update(dayOf(e.ts.get)); e
             }
           }
           out.iterator
       }
   }
+
+  private def rawKey(e: RawLog): String = e.common.map(_.mid).orNull
+  private def rawOrder(e: RawLog) = (e.ts, e.page.flatMap(p => Option(p.page_id)))
+  /** Only clean rows claiming is_new=1 read or write the first-visit state. */
+  private def claimsNew(e: RawLog): Boolean = !e.dirty && e.common.get.is_new == "1"
+  private def notNew(e: RawLog): RawLog = e.copy(common = e.common.map(_.copy(is_new = "0")))
 
   // ---------------- A17: daily unique-visitor dedup ----------------
 
@@ -231,11 +237,10 @@ object Stateful {
 
     override def handleInputRows(key: String, rows: Iterator[RawLog],
                                  timerValues: TimerValues): Iterator[RawLog] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts, e.page.flatMap(p => Option(p.page_id))))
-      sorted.map { e =>
-        if (e.common.is_new != "1") e
-        else if (!firstDay.exists()) { firstDay.update(dayOf(e.ts)); e }
-        else if (firstDay.get() != dayOf(e.ts)) e.copy(common = e.common.copy(is_new = "0"))
+      rows.toSeq.sortBy(rawOrder).map { e =>
+        if (!claimsNew(e)) e
+        else if (!firstDay.exists()) { firstDay.update(dayOf(e.ts.get)); e }
+        else if (firstDay.get() != dayOf(e.ts.get)) notNew(e)
         else e
       }.iterator
     }
@@ -246,7 +251,7 @@ object Stateful {
   def repairIsNewRawTws(logs: Dataset[RawLog]): Dataset[RawLog] = {
     import logs.sparkSession.implicits._
     logs
-      .groupByKey(_.common.mid)
+      .groupByKey(rawKey)
       .transformWithState(new RepairIsNewRawProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }

@@ -63,6 +63,109 @@ class MainsSpec extends SparkSuite {
       s"state survived the restart: day2 claim repaired to 0 (got $m1ByTs)")
   }
 
+  private val dwdTopics = Seq("dwd_dirty_log", "dwd_display_log", "dwd_page_log", "dwd_start_log")
+
+  /** The data files of a topic dir, manifest excluded. */
+  private def dataFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filterNot(_.startsWith("_")).toSet
+
+  for (api <- Seq("v1", "v2"))
+    test(s"base_log is ONE query with one source, and a replayed batch adds no row on state API $api") {
+      withStateApi(api) { replayBody() }
+    }
+
+  private def replayBody(): Unit = {
+    val inDir = tmp("replay-in"); val outDir = tmp("replay-out"); val ckptDir = tmp("replay-ckpt")
+    val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
+    Files.write(new java.io.File(srcDir, "b1.txt").toPath, java.util.Arrays.asList(
+      logLine("r1", "1", day1),
+      s"""{"common":{"ar":"1","uid":"u","ch":"web","is_new":"1","mid":"r1","vc":"v1"},"start":{"entry":"icon","loading_time":10},"ts":$day2}""",
+      s"""{"common":{"ar":"1","uid":"u","ch":"web","is_new":"0","mid":"r2","vc":"v1"},"page":{"page_id":"home","during_time":3},"displays":[{"display_type":"promo","item":"7","item_type":"sku_id"}],"ts":$day1}""",
+      "garbage not json at all"))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val qs = Mains.start(spark, "base_log", inDir, outDir, ckptDir)
+    qs.foreach(_.awaitTermination())
+    assert(qs.size == 1, s"one streaming query for the four DWD topics, got ${qs.size}")
+    val progress = qs.head.recentProgress.filter(_.numInputRows > 0)
+    assert(progress.nonEmpty && progress.forall(_.sources.length == 1),
+      s"one source scan per batch: ${progress.map(_.sources.length).toSeq}")
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the persisted micro-batch is released after the drain")
+
+    // committed JSON lines per topic (a dirty row of nulls is the line `{}`)
+    def counts() = dwdTopics.map(t => t -> spark.read.text(s"$outDir/$t").count()).toMap
+    val before = counts()
+    assert(before == Map("dwd_dirty_log" -> 1L, "dwd_display_log" -> 1L,
+      "dwd_page_log" -> 2L, "dwd_start_log" -> 1L), s"fused split: $before")
+    val filesBefore = dwdTopics.map(t => t -> dataFiles(s"$outDir/$t")).toMap
+
+    // crash after the sinks committed but before the engine's commit: the
+    // restarted query replays the last batch id, which every sink skips
+    val commits = new java.io.File(s"$ckptDir/base_log/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    commits.listFiles().filter(f => f.getName == last || f.getName == s".$last.crc")
+      .foreach(f => assert(f.delete()))
+    Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+    assert(commits.list().contains(last), "the replayed batch committed")
+    assert(counts() == before, "no topic gained a row on replay")
+    assert(dwdTopics.map(t => t -> dataFiles(s"$outDir/$t")).toMap == filesBefore,
+      "the replayed batch wrote no file")
+  }
+
+  test("base_log refuses to start fresh over committed sinks or old per-topic checkpoints") {
+    val inDir = tmp("guard-in"); val outDir = tmp("guard-out"); val ckptDir = tmp("guard-ckpt")
+    val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
+    Files.write(new java.io.File(srcDir, "b1.txt").toPath,
+      java.util.Arrays.asList(logLine("g1", "1", day1)))
+    Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+
+    // checkpoint lost, sinks kept: a fresh query would restart at batch 0
+    val fresh = tmp("guard-ckpt2")
+    val e = intercept[IllegalStateException](Mains.start(spark, "base_log", inDir, outDir, fresh))
+    assert(e.getMessage.contains("silently drop data") && e.getMessage.contains("dwd_page_log"),
+      s"named refusal expected: ${e.getMessage}")
+    assert(!new java.io.File(s"$fresh/base_log").exists(), "refused before any query started")
+
+    // the four-query layout's checkpoints left beside fresh outputs
+    val oldCkpt = tmp("guard-old"); new java.io.File(s"$oldCkpt/dwd_start_log/commits").mkdirs()
+    val e2 = intercept[IllegalStateException](
+      Mains.start(spark, "base_log", inDir, tmp("guard-out2"), oldCkpt))
+    assert(e2.getMessage.contains("dwd_start_log"), e2.getMessage)
+
+    // restarting with the checkpoint that wrote the outputs is fine
+    Mains.start(spark, "base_log", inDir, outDir, ckptDir).foreach(_.awaitTermination())
+  }
+
+  test("base_db refuses to open a fact manifest over facts written without one") {
+    val inDir = tmp("bare-in"); val outDir = tmp("bare-out")
+    new java.io.File(s"$inDir/ods_base_db_m").mkdirs()
+    val old = new java.io.File(s"$outDir/kafka_facts/topic=dwd_order_info"); old.mkdirs()
+    Files.write(new java.io.File(old, "part-00000.json").toPath,
+      java.util.Arrays.asList("""{"value":"{}"}"""))
+    val e = intercept[IllegalStateException](
+      Mains.start(spark, "base_db", inDir, outDir, tmp("bare-ckpt")))
+    assert(e.getMessage.contains("no _spark_metadata manifest"), e.getMessage)
+    assert(!new java.io.File(s"$outDir/kafka_facts/_spark_metadata").exists(),
+      "refused before the sink opened a manifest")
+  }
+
+  test("a failing DWD sink still releases the persisted micro-batch") {
+    import spark.implicits._
+    val batch = Apps.baseLogRepaired(Seq(logLine("f1", "1", day1)).toDF("value"))
+    val written = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sinks = dwdTopics.map { t =>
+      t -> ((_: Long, df: org.apache.spark.sql.DataFrame) =>
+        if (t == "dwd_page_log") throw new java.io.IOException("disk full")
+        else { df.count(); written += t; () })
+    }.toMap
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[java.io.IOException](Mains.writeBaseLog(batch, 0L, sinks))
+    assert(e.getMessage == "disk full")
+    assert(written.toSeq == Seq("dwd_dirty_log", "dwd_display_log"), written.toSeq)
+    assert(spark.sparkContext.getPersistentRDDs.size == cachedBefore,
+      "the batch is unpersisted on the failure path")
+  }
+
   test("kill MID-stream: stop with input still unprocessed, restart finishes exactly-once") {
     val inDir = tmp("kill-in"); val outDir = tmp("kill-out"); val ckptDir = tmp("kill-ckpt")
     val srcDir = new java.io.File(s"$inDir/ods_base_log"); srcDir.mkdirs()
